@@ -447,7 +447,6 @@ def build_index(
     resume: bool = False,
     only_shards: list[int] | None = None,
     max_doc_size: int = MAX_DOC_SIZE,
-    store_positions: bool = True,
     pretokenized: bool = False,
 ) -> IndexTables:
     """Build (or resume) the index. ``only_shards`` restricts the build to
@@ -463,8 +462,8 @@ def build_index(
     rebuilds from stored forward indexes without re-tokenizing.
 
     The fwd table always stores the full token sequence (positional /
-    parsedText mode — proximity scoring needs no rebuild);
-    ``store_positions`` is accepted for API stability and ignored."""
+    parsedText mode), so the same index also serves proximity scoring
+    (e.g. the close-pair proximity entries) with no rebuild."""
     tables = IndexTables(index_dir)
     build_id = uuid.uuid4().hex[:12]
 

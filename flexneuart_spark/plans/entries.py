@@ -195,7 +195,6 @@ def _engine_index(spark: SparkSession, sf_dir: str) -> IndexTables:
         _INDEX_CACHE[sf_dir] = build_index(
             spark, docs, idx, num_shards=None,  # auto_num_shards sizing rule
             tokenizer="whitespace", text_col="content",
-            store_positions=True,  # also serves the close-pair proximity entries
         )
     return _INDEX_CACHE[sf_dir]
 
@@ -282,7 +281,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on rounded score for cross-engine stability."""
     tables = _engine_index(spark, sf_dir)
     s = Searcher(spark, tables, tokenizer="whitespace")
-    run = s.search(DOC_QUERIES, k=ENGINE_BUFFER, pruned=True)
+    run = s.search(DOC_QUERIES, k=ENGINE_BUFFER)
     run = run.select("query_id", F.col("doc_id").cast("long").alias("doc_id"), "score")
     return _rounded_topk(run)
 

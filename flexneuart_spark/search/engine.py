@@ -13,32 +13,30 @@ Physical plan:
   2. ``postings.filter(term IN query_vocab)`` — partition keys + parquet
      row-group stats (postings are written sorted by term within shard)
      prune the scan to the query's posting rows only;
-  3. ``groupBy(seg, shard).applyInPandas`` → numpy MaxScore/block-max
-     kernel with a bounded heap per (shard, query) → ≤ k rows per
-     seg·shard·query;
+  3. ``groupBy(seg, shard).applyInPandas`` → numpy top-k kernel with a
+     bounded heap per (shard, query) → ≤ k rows per seg·shard·query;
   4. label ordinals with doc_ids: broadcast-join the tiny result against
      the doc map (seg, shard, ord, doc_id);
   5. global top-k merge: window by query, (score desc, doc_id desc).
 
-Warmed searchers cache the postings pre-partitioned by shard, so the
-per-query groupBy needs no exchange — the kernel runs as one
-scan-and-score stage over the cache. An opt-in driver-merge mode
-(``search(driver_merge=True)``, doc map ≤ a warm limit) instead ships
-per-shard doc_id arrays to the kernel as a broadcast and merges the
-≤ k·shards·queries rows driver-side in a single job — result-identical
-(tested) under the (score desc, doc_id desc) tie rule, measured
-comparable on this box, and the natural mode when the caller wants the
-run driver-local anyway.
+``search(kernel=...)`` picks the step-3 kernel by name: "maxscore"
+(default), "bmw" (Block-Max WAND) or "exhaustive" — result-identical,
+equivalence-tested. Warmed searchers cache the postings pre-partitioned
+by shard, so the per-query groupBy needs no exchange — the kernel runs
+as one scan-and-score stage over the cache.
 
 ``SegmentedSearcher`` searches a set of independently-built index
 segments (the incremental-ingest layout, flexneuart_spark.streaming):
 corpus stats and df are merged exactly across segments, so scores are
 identical to a single monolithic build — possible because posting
 payloads carry raw (tf, dl) and block metadata is avgdl-independent.
+Both searchers share query prep and the plan above; they differ only in
+where idf and the (postings, doc map) frames come from.
 """
 
 from __future__ import annotations
 
+import math
 from collections import Counter
 
 import pandas as pd
@@ -52,16 +50,18 @@ from flexneuart_spark.search.scoring import TermPostings, bmw_topk, exhaustive_t
 
 _KERNELS = {"maxscore": maxscore_topk, "bmw": bmw_topk, "exhaustive": exhaustive_topk}
 
+# warm() caches term→idf driver-side when the dictionary has at most this
+# many terms; larger dictionaries keep the per-query dictionary lookup
+MAX_DICT_TERMS = 2_000_000
 
-def _resolve_kernel(pruned: bool, kernel: str | None):
-    """``kernel`` names one of the result-identical top-k kernels
-    (maxscore | bmw | exhaustive); when None, ``pruned`` keeps its
-    original meaning (True → maxscore, False → exhaustive)."""
-    if kernel is None:
-        return maxscore_topk if pruned else exhaustive_topk
-    if kernel not in _KERNELS:
-        raise ValueError(f"unknown kernel {kernel!r}; expected one of {sorted(_KERNELS)}")
-    return _KERNELS[kernel]
+
+def _resolve_kernel(kernel: str):
+    """Name → one of the result-identical top-k kernels."""
+    try:
+        return _KERNELS[kernel]
+    except KeyError:
+        raise ValueError(f"unknown kernel {kernel!r}; expected one of {sorted(_KERNELS)}") from None
+
 
 _SCORED_SCHEMA = "seg int, shard int, query_id string, ord long, score double"
 _EMPTY_RUN_SCHEMA = "query_id string, doc_id string, score double, rank int"
@@ -126,77 +126,48 @@ def _search_frames(
     )
 
 
-def _search_fast(
-    spark: SparkSession,
-    posts: DataFrame,
-    docmap_bcast,
-    idf: dict[str, float],
-    avgdl: float,
-    qtf: dict[str, dict[str, int]],
-    k: int,
-    k1: float,
-    b: float,
-    kernel,
-) -> DataFrame:
-    """Single-job search: the kernel labels ordinals from the broadcast
-    per-shard doc_id arrays; the ≤ k·shards·queries rows are merged
-    driver-side under the (score desc, doc_id desc) tie rule."""
-    qweights = {
-        qid: {t: c * idf[t] * (k1 + 1.0) for t, c in d.items() if t in idf}
-        for qid, d in qtf.items()
-    }
-    qweights = {qid: d for qid, d in qweights.items() if d}
-    if not qweights:
-        return spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        ids = docmap_bcast.value.get(shard)
-        if ids is None:
-            raise RuntimeError(
-                f"shard {shard} missing from the warmed doc-id map — the index "
-                "was rebuilt with a different shard layout after warm(); call "
-                "warm() again or use the distributed search path"
-            )
-        by_term = {row.term: row for row in pdf.itertuples(index=False)}
-        out_q, out_d, out_s = [], [], []
-        for qid, wts in qweights.items():
-            entries = [
-                TermPostings(
-                    r.payload, r.block_off, r.block_n,
-                    r.block_max_doc, r.block_max_tf, r.block_min_dl,
-                    w,
-                )
-                for t, w in wts.items()
-                if (r := by_term.get(t)) is not None
-            ]
-            if not entries:
-                continue
-            ords, scores = kernel(entries, k, avgdl, k1, b)
-            out_q.extend([qid] * len(ords))
-            out_d.extend(ids[ords].tolist())
-            out_s.extend(scores.tolist())
-        return pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score": out_s})
-
-    rows = (
-        posts.groupBy("shard")
-        .applyInPandas(score_shard, "query_id string, doc_id string, score double")
-        .collect()
-    )
-    byq: dict[str, list] = {}
-    for r in rows:
-        byq.setdefault(r.query_id, []).append((r.doc_id, float(r.score)))
-    out = []
-    for qid, lst in byq.items():
-        lst.sort(key=lambda t: t[0], reverse=True)   # doc_id desc (stable)
-        lst.sort(key=lambda t: t[1], reverse=True)   # then score desc
-        out.extend((qid, d, s, rank + 1) for rank, (d, s) in enumerate(lst[:k]))
-    if not out:
-        return spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-    return spark.createDataFrame(out, _EMPTY_RUN_SCHEMA)
 
 
-class Searcher:
+def _seg_docmap(spark: SparkSession, tables: IndexTables, seg: int) -> DataFrame:
+    """(shard, ord, doc_id, seg) doc map of one index segment."""
+    return tables.docmap(spark).select("shard", "ord", "doc_id").withColumn("seg", F.lit(seg))
+
+
+class _BM25Searcher:
+    """Query prep + the one search plan shared by both searchers.
+    Subclasses set ``spark``, ``tokenize``, ``k1``, ``b``, ``avgdl`` and
+    supply ``_idf(vocab)`` and ``_frames(live_terms)``."""
+
+    def _query_tf(self, queries: list[tuple[str, str]]) -> dict[str, dict[str, int]]:
+        qtoks = {qid: self.tokenize(text) for qid, text in queries}
+        # empty queries drop out (LuceneCandidateProvider.java:125-126)
+        return {qid: dict(Counter(toks)) for qid, toks in qtoks.items() if toks}
+
+    def search(
+        self,
+        queries: list[tuple[str, str]],
+        k: int = 10,
+        kernel: str = "maxscore",
+    ) -> DataFrame:
+        """queries: [(query_id, text)] → run DataFrame
+        (query_id, doc_id, score, rank) under the reference tie rule.
+
+        ``kernel`` picks the per-shard top-k kernel by name
+        ("maxscore" | "bmw" | "exhaustive" — result-identical,
+        equivalence-tested); an unknown name raises ``ValueError``."""
+        score_fn = _resolve_kernel(kernel)
+        qtf = self._query_tf(queries)
+        vocab = sorted({t for d in qtf.values() for t in d})
+        idf = self._idf(vocab) if vocab else {}
+        if not idf:
+            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
+        posts, fwd_ids = self._frames(sorted(idf))
+        return _search_frames(
+            self.spark, posts, fwd_ids, idf, self.avgdl, qtf, k, self.k1, self.b, score_fn
+        )
+
+
+class Searcher(_BM25Searcher):
     def __init__(
         self,
         spark: SparkSession,
@@ -223,33 +194,22 @@ class Searcher:
         self._fwd_ids = None
         self._posts = None
         self._idf_cache: dict[str, float] | None = None
-        self._docmap_bcast = None
-        self._n_map = 0
-        self._max_docmap_docs = 0
 
-    def warm(self, max_dict_terms: int = 2_000_000, max_docmap_docs: int = 5_000_000) -> "Searcher":
+    def warm(self) -> "Searcher":
         """Pin the (shard, ord, doc_id) projection AND the postings table
-        in executor memory and, when the dictionary is small enough, cache
-        term→idf driver-side — repeated searches then skip the per-query
-        metadata jobs and the parquet listing/scan (the reference holds
-        its whole index + idf cache in memory for the batch too,
-        TFIDFSimilarity.java:48-58; Lucene relies on the OS page cache).
-
-        ``max_docmap_docs`` bounds the lazily-built doc-map broadcast used
-        by ``search(driver_merge=True)``. Re-warming releases the previous
-        caches and broadcast (safe after the index was rebuilt)."""
+        in executor memory and, when the dictionary has at most
+        ``MAX_DICT_TERMS`` terms, cache term→idf driver-side — repeated
+        searches then skip the per-query metadata jobs and the parquet
+        listing/scan (the reference holds its whole index + idf cache in
+        memory for the batch too, TFIDFSimilarity.java:48-58; Lucene
+        relies on the OS page cache). Re-warming releases the previous
+        caches (safe after the index was rebuilt)."""
         if self._fwd_ids is not None:
             self._fwd_ids.unpersist()
         if self._posts is not None:
             self._posts.unpersist()
-        if self._docmap_bcast is not None:
-            self._docmap_bcast.unpersist()
-            self._docmap_bcast = None
-        self._fwd_ids = (
-            self.tables.docmap(self.spark).select("shard", "ord", "doc_id").withColumn("seg", F.lit(0)).persist()
-        )
-        self._n_map = self._fwd_ids.count()
-        self._max_docmap_docs = max_docmap_docs
+        self._fwd_ids = _seg_docmap(self.spark, self.tables, 0).persist()
+        self._fwd_ids.count()  # materialize now, not on the first query
         # cache the postings ALREADY hash-partitioned by shard: the
         # per-query groupBy(shard) then needs no exchange — the whole
         # search kernel runs as one scan-and-score stage over the cache.
@@ -259,92 +219,30 @@ class Searcher:
         npart = min(16, self.spark.sparkContext.defaultParallelism)
         self._posts = self.tables.postings(self.spark).repartition(npart, "shard").persist()
         self._posts.count()
-        head = self.tables.dictionary(self.spark).select("term", "idf").limit(max_dict_terms + 1).collect()
-        if len(head) <= max_dict_terms:
+        head = self.tables.dictionary(self.spark).select("term", "idf").limit(MAX_DICT_TERMS + 1).collect()
+        if len(head) <= MAX_DICT_TERMS:
             self._idf_cache = {r.term: float(r.idf) for r in head}
         return self
 
-    def _docmap_broadcast(self):
-        if self._docmap_bcast is None:
-            if self._fwd_ids is None or not (0 < self._n_map <= self._max_docmap_docs):
-                return None
-            import numpy as np
-
-            rows = self._fwd_ids.select("shard", "ord", "doc_id").collect()
-            by_shard: dict[int, list] = {}
-            for r in rows:
-                by_shard.setdefault(int(r.shard), []).append((int(r.ord), r.doc_id))
-            shard_ids = {
-                s: np.array([d for _, d in sorted(pairs)], dtype=object)
-                for s, pairs in by_shard.items()
-            }
-            self._docmap_bcast = self.spark.sparkContext.broadcast(shard_ids)
-        return self._docmap_bcast
-
-    def _query_tf(self, queries: list[tuple[str, str]]) -> dict[str, dict[str, int]]:
-        qtoks = {qid: self.tokenize(text) for qid, text in queries}
-        # empty queries drop out (LuceneCandidateProvider.java:125-126)
-        return {qid: dict(Counter(toks)) for qid, toks in qtoks.items() if toks}
-
-    def search(
-        self,
-        queries: list[tuple[str, str]],
-        k: int = 10,
-        pruned: bool = True,
-        driver_merge: bool = False,
-        kernel: str | None = None,
-    ) -> DataFrame:
-        """queries: [(query_id, text)] → run DataFrame
-        (query_id, doc_id, score, rank) under the reference tie rule.
-
-        ``kernel`` picks the per-shard top-k kernel by name
-        ("maxscore" | "bmw" | "exhaustive" — result-identical,
-        equivalence-tested); default follows ``pruned``.
-
-        ``driver_merge=True`` (warmed searchers, doc map within the warm
-        limit) labels/merges the ≤ k·shards·queries rows driver-side in a
-        single Spark job — result-identical (tested); measured comparable
-        to the default distributed join + window plan, kept as an option
-        for driver-local post-processing."""
-        qtf = self._query_tf(queries)
-        vocab = sorted({t for d in qtf.values() for t in d})
-        if not vocab:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
+    def _idf(self, vocab: list[str]) -> dict[str, float]:
         if self._idf_cache is not None:
-            idf = {t: self._idf_cache[t] for t in vocab if t in self._idf_cache}
-        else:
-            dic = (
-                self.tables.dictionary(self.spark)
-                .filter(F.col("term").isin(vocab))
-                .select("term", "idf")
-                .collect()
-            )
-            idf = {r.term: float(r.idf) for r in dic}
-        live = [t for t in vocab if t in idf]
-        if not live:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
+            return {t: self._idf_cache[t] for t in vocab if t in self._idf_cache}
+        dic = (
+            self.tables.dictionary(self.spark)
+            .filter(F.col("term").isin(vocab))
+            .select("term", "idf")
+            .collect()
+        )
+        return {r.term: float(r.idf) for r in dic}
+
+    def _frames(self, live: list[str]) -> tuple[DataFrame, DataFrame]:
         posts_src = self._posts if self._posts is not None else self.tables.postings(self.spark)
-        if driver_merge and (bcast := self._docmap_broadcast()) is not None:
-            return _search_fast(
-                self.spark,
-                posts_src.filter(F.col("term").isin(live)),
-                bcast,
-                idf, self.avgdl, qtf, k, self.k1, self.b,
-                _resolve_kernel(pruned, kernel),
-            )
         posts = posts_src.filter(F.col("term").isin(live)).withColumn("seg", F.lit(0))
-        fwd_ids = self._fwd_ids if self._fwd_ids is not None else (
-            self.tables.docmap(self.spark)
-            .select("shard", "ord", "doc_id")
-            .withColumn("seg", F.lit(0))
-        )
-        return _search_frames(
-            self.spark, posts, fwd_ids, idf, self.avgdl, qtf, k, self.k1, self.b,
-            _resolve_kernel(pruned, kernel),
-        )
+        fwd_ids = self._fwd_ids if self._fwd_ids is not None else _seg_docmap(self.spark, self.tables, 0)
+        return posts, fwd_ids
 
 
-class SegmentedSearcher:
+class SegmentedSearcher(_BM25Searcher):
     """Search across N independently-built segments (incremental layout:
     ``root/segments/<id>/`` each a full IndexTables). Global df/N/avgdl
     are exact merges, so results are identical to a monolithic build."""
@@ -375,24 +273,10 @@ class SegmentedSearcher:
         self.total_tokens = int(agg.tt or 0)
         self.avgdl = (self.total_tokens / self.n_docs) if self.n_docs else 1.0
 
-    def search(
-        self,
-        queries: list[tuple[str, str]],
-        k: int = 10,
-        pruned: bool = True,
-        kernel: str | None = None,
-    ) -> DataFrame:
-        import math
-
-        qtoks = {qid: self.tokenize(text) for qid, text in queries}
-        qtf = {qid: dict(Counter(toks)) for qid, toks in qtoks.items() if toks}
-        vocab = sorted({t for d in qtf.values() for t in d})
-        if not vocab:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
+    def _idf(self, vocab: list[str]) -> dict[str, float]:
         # exact global df merge across segments — ONE multi-path read +
         # groupBy, a single collect of ≤|vocab| rows however many
         # segments exist (no per-segment driver round-trips)
-        df_glob: Counter = Counter()
         merged = (
             self.spark.read.parquet(*[t.dictionary_dir for t in self.tables])
             .filter(F.col("term").isin(vocab))
@@ -400,22 +284,16 @@ class SegmentedSearcher:
             .agg(F.sum("df").alias("df"))
             .collect()
         )
-        for r in merged:
-            df_glob[r.term] = int(r.df)
-        if not df_glob:
-            return self.spark.createDataFrame([], _EMPTY_RUN_SCHEMA)
-        idf = {
-            t: math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5)) for t, df in df_glob.items()
+        return {
+            r.term: math.log(1.0 + (self.n_docs - r.df + 0.5) / (r.df + 0.5)) for r in merged
         }
-        live = sorted(idf)
+
+    def _frames(self, live: list[str]) -> tuple[DataFrame, DataFrame]:
         posts = None
         fwd_ids = None
         for i, t in enumerate(self.tables):
             p = t.postings(self.spark).filter(F.col("term").isin(live)).withColumn("seg", F.lit(i))
-            f_ = t.docmap(self.spark).select("shard", "ord", "doc_id").withColumn("seg", F.lit(i))
+            f_ = _seg_docmap(self.spark, t, i)
             posts = p if posts is None else posts.unionByName(p)
             fwd_ids = f_ if fwd_ids is None else fwd_ids.unionByName(f_)
-        return _search_frames(
-            self.spark, posts, fwd_ids, idf, self.avgdl, qtf, k, self.k1, self.b,
-            _resolve_kernel(pruned, kernel),
-        )
+        return posts, fwd_ids

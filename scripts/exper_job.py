@@ -36,7 +36,9 @@ def _read_queries(spark, path: str) -> list[tuple[str, str]]:
         qdf = spark.read.option("multiLine", True).json(path)
     else:
         qdf = spark.read.parquet(path)
-    return [(r.query_id, r.text) for r in qdf.select("query_id", "text").collect()]
+    # JSON schema inference reads numeric ids as longs; run and qrels ids are strings
+    qdf = qdf.select(qdf.query_id.cast("string"), qdf.text.cast("string"))
+    return [(r.query_id, r.text) for r in qdf.collect()]
 
 
 def _kv_pairs(items: list[str], flag: str) -> dict[str, str]:

@@ -13,6 +13,16 @@ import argparse
 import sys
 
 
+def _read_queries(spark, path: str) -> list[tuple[str, str]]:
+    if path.endswith(".jsonl") or path.endswith(".json"):
+        qdf = spark.read.json(path)
+    else:
+        qdf = spark.read.parquet(path)
+    # JSON schema inference reads numeric ids as longs; run and qrels ids are strings
+    qdf = qdf.select(qdf.query_id.cast("string"), qdf.text.cast("string"))
+    return [(r.query_id, r.text) for r in qdf.collect()]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index", required=True)
@@ -31,11 +41,7 @@ def main() -> None:
     from flexneuart_spark.search.engine import Searcher
 
     spark = SparkSession.builder.appName("flexneuart_query").getOrCreate()
-    if args.queries.endswith(".jsonl") or args.queries.endswith(".json"):
-        qdf = spark.read.json(args.queries)
-    else:
-        qdf = spark.read.parquet(args.queries)
-    queries = [(r.query_id, r.text) for r in qdf.select("query_id", "text").collect()]
+    queries = _read_queries(spark, args.queries)
     s = Searcher(spark, args.index, tokenizer=args.tokenizer)
     run = s.search(queries, k=args.k, kernel=args.kernel)
     write_run(run, args.output, run_id=args.run_id)

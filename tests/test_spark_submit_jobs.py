@@ -365,3 +365,17 @@ def test_spark_submit_exper_job(tmp_path):
     assert res["baseline_metrics"]["map"] == pytest.approx(1.0)
     fused = glob.glob(os.path.join(out_dir, "e2e", "**", "part-*"), recursive=True)
     assert fused, "fused run not written under <out>/<experSubdir>"
+
+
+@pytest.mark.parametrize("script", ["query_job.py", "exper_job.py"])
+def test_job_reads_integer_query_ids_as_strings(spark, tmp_path, script):
+    """JSON schema inference types integer query ids as longs; the jobs
+    must hand the engine string ids so runs match string qrels/run ids."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(script[:-3], os.path.join(ROOT, "scripts", script))
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    qfile = tmp_path / "queries.jsonl"
+    qfile.write_text('{"query_id": 101, "text": "data system"}\n{"query_id": 7, "text": "cats"}\n')
+    assert sorted(job._read_queries(spark, str(qfile))) == [("101", "data system"), ("7", "cats")]
